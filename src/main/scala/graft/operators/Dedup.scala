@@ -75,25 +75,18 @@ object Dedup {
     * OWN shingled relation (the neardup_jaccard TVF, the pipeline's
     * filtered corpus, the char-5-gram postings). The postings self-join +
     * intersection count is the one expensive intermediate behind every
-    * such query; thresholds are downstream filters, so the registry key
-    * is the shingled plan's semantic hash + its input-file fingerprint
-    * (the ensureIndex snapshot key — an in-place rewrite changes the
-    * fingerprint; in-memory relations carry their data in the
-    * LocalRelation semanticHash) + maxDf. Same RDD doctrine as
-    * [[wordPairsAll]]: nothing persist()ed, later consumers reuse the
-    * computed shuffle files as skipped stages, the stress harness evicts
-    * the registry so scale receipts still price the build. */
+    * such query; thresholds are downstream filters, so the registry entry
+    * is keyed by the shingled plan (see [[graft.SessionMemo.ofPlan]]) and
+    * maxDf. Same RDD doctrine as [[wordPairsAll]]: nothing persist()ed,
+    * later consumers reuse the computed shuffle files as skipped stages,
+    * the stress harness evicts the registry so scale receipts still price
+    * the build. */
   private def pairsAllOf(shingled: DataFrame, maxDf: Int): DataFrame = {
-    val s = shingled.sparkSession
-    val snap = graft.sources.PairStore.fileFingerprint(
-      s, shingled.inputFiles.toSeq)
-    val key = s"jacc_pairs_${shingled.queryExecution.analyzed.semanticHash()}" +
-      s"_${snap}_$maxDf"
-    val (rdd, schema) = graft.SessionMemo.of(s, "", key) {
+    val (rdd, schema) = graft.SessionMemo.ofPlan(shingled, s"jacc_pairs_$maxDf") {
       val df = pairsAllFromPostings(cutPostings(shingled, maxDf))
       (df.rdd, df.schema)
     }
-    s.createDataFrame(rdd, schema)
+    shingled.sparkSession.createDataFrame(rdd, schema)
   }
 
   /** The word-3-shingle df-cut postings every word-level similarity
@@ -247,12 +240,8 @@ object Dedup {
     // relation feeds both candidate self-join sides — materialize each
     // once, keyed by plan identity (the pairsAllOf doctrine) so the SQL
     // TVF twin shares the same artifacts.
-    val s = docs0.sparkSession
-    val snap = graft.sources.PairStore.fileFingerprint(s, docs0.inputFiles.toSeq)
-    val pk = s"minhash_${docs0.queryExecution.analyzed.semanticHash()}" +
-      s"_${snap}"
-    val docs = graft.operators.Relational.materializeOnce(s, "", pk + "_sh")(docs0)
-    val banded = graft.operators.Relational.materializeOnce(s, "", pk + "_band")(
+    val docs = graft.SessionMemo.ofPlanPersisted(docs0, "minhash_sh")(docs0)
+    val banded = graft.SessionMemo.ofPlanPersisted(docs0, "minhash_band")(
       docs.select(
       col("doc_id"),
       posexplode(call_function("minhash_bands", col("sh"), lit(64), lit(16))))
@@ -448,7 +437,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     // r17 optimization: the self-join's two sides otherwise re-run the
     // scan + explode + df window each — materialize the postings once.
-    val inv = graft.operators.Relational.materializeOnce(s, d, "window_dedup_inv")(
+    val inv = graft.SessionMemo.ofPersisted(s, d, "window_dedup_inv")(
       Tables.documents(s, d)
       .select(col("doc_id"),
         explode(call_function("word_shingles", col("text"), lit(WindowK))).as("s0"))
@@ -723,7 +712,7 @@ object Dedup {
     // r17 optimization: both sides of the delta-vs-corpus join read this
     // postings relation — materialize it once instead of re-running the
     // scan + explode + two df/size windows per side.
-    val inv = graft.operators.Relational.materializeOnce(s, d, "neardup_incr_inv")(
+    val inv = graft.SessionMemo.ofPersisted(s, d, "neardup_incr_inv")(
       docs.select(col("doc_id"), col("b"), explode(col("sh")).as("s0"))
       .select(col("doc_id"), col("b"), xxhash64(col("s0")).as("s"))
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("s"))))
@@ -1061,7 +1050,7 @@ object Dedup {
     // r17 optimization: the hashed shingle stream feeds the first-seen
     // aggregate AND the join side — materialized once (one corpus
     // explode, not two).
-    val sh = graft.operators.Relational.materializeOnce(s, d, "novelty_sh")(
+    val sh = graft.SessionMemo.ofPersisted(s, d, "novelty_sh")(
       Tables.documents(s, d)
       .select(col("doc_id"), explode(shingleCol).as("s"))
       .select(col("doc_id"), xxhash64(col("s")).as("h")))

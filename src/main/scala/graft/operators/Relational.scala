@@ -224,10 +224,10 @@ object Relational {
     // (6 event scans per execution). Per-user scalar rows (the r17
     // q_above_avg_spenders class), evictAll-registered; the type-filtered
     // event scans keep their own pushed filters (one scan each).
-    val t1 = materializeOnce(s, d, "funnel_t1")(
+    val t1 = graft.SessionMemo.ofPersisted(s, d, "funnel_t1")(
       ev.filter(col("event_type") === "signup")
         .groupBy(col("user_id")).agg(min(col("ms")).as("t1")))
-    val t2 = materializeOnce(s, d, "funnel_t2")(
+    val t2 = graft.SessionMemo.ofPersisted(s, d, "funnel_t2")(
       ev.filter(col("event_type") === "view")
         .join(t1, "user_id")
         .filter(col("ms") > col("t1") && col("ms") <= col("t1") + stepMs)
@@ -255,7 +255,7 @@ object Relational {
     // r18: feeds the cohort aggregate AND the join back — materialize the
     // (user, week)-distinct collapse once (the churn_user_weeks pattern;
     // different week column name keeps the memo entries distinct).
-    val uw = materializeOnce(s, d, "cohort_user_weeks")(
+    val uw = graft.SessionMemo.ofPersisted(s, d, "cohort_user_weeks")(
       EventTime.withMs(Tables.events(s, d))
         .select(col("user_id"), expr("ms div 604800000").as("w"))
         .distinct())
@@ -498,31 +498,13 @@ object Relational {
       df.schema.add(out, org.apache.spark.sql.types.IntegerType, nullable = false))
   }
 
-  /** Multi-pass guard: persist `df` (memory, disk overflow) so algorithms
-    * that run several ACTIONS over one expensively-collapsed relation
-    * (rangeCumSum runs a quantile sketch, a per-bucket total, and the
-    * final plan over its input) compute the upstream aggregation once —
-    * the r12 abc ×100 re-receipt measured the unguarded recomputation at
-    * 27.9×, and a parquet-spill variant paid a 2M-row write (~13 s at
-    * ×100) the cache avoids. The cache is NOT unpersisted here — the
-    * returned plan still reads it at the caller's final action. Its
-    * lifecycle is the session registry's (r12 ADVICE): the entry is
-    * memoized per (session, dir, key) so repeated invocations reuse ONE
-    * `InMemoryRelation` instead of stacking duplicates, and
-    * [[graft.SessionMemo.evictAll]] unpersists it. It is
-    * collapsed-relation-sized (dimension cardinality, not fact) and
-    * spills to disk under pressure. */
-  private[graft] def materializeOnce(s: SparkSession, dir: String,
-      key: String)(df: => DataFrame): DataFrame =
-    graft.SessionMemo.ofPersisted(s, dir, key)(df)
-
   /** Distributed EXACT global prefix sum — the cumulative-share twin of
     * rangeNtile, for Pareto/Lorenz-style "cumulative mass in this order"
     * over an SF-scaling relation (the r11 ×100 receipt priced
     * q_abc_analysis's unpartitioned cumulative window at 13.6×; this
     * removes the single-partition sort entirely). The input should be
-    * cheap to rescan — [[materializeOnce]] it first when it is itself an
-    * aggregation (this operator runs three passes over it).
+    * cheap to rescan — [[graft.SessionMemo.ofPersisted]] it first when it
+    * is itself an aggregation (this operator runs three passes over it).
     *
     * r12 shape — fully declarative, whole-stage-codegen, one data shuffle
     * (the r11 RDD two-job version priced at 14.6×/×100 with its Row
@@ -626,7 +608,7 @@ object Relational {
     // the total-count scalar — materialized once (distinct-value-sized)
     // so the fact is aggregated once, not twice; the assignment scan
     // below is the one remaining fact pass.
-    val hist = materializeOnce(s, d, "ntile_thr_hist")(
+    val hist = graft.SessionMemo.ofPersisted(s, d, "ntile_thr_hist")(
       v.groupBy(col("v")).agg(count(lit(1)).as("c")))
     val cum = hist.withColumn("cum",
       sum(col("c")).over(Window.orderBy(col("v"))
@@ -842,7 +824,7 @@ object Relational {
     // feeds both its own count and the lineitem cascade — materialize it
     // once instead of running the orders semi-join twice.
     val custDel = del
-    val ordDel = materializeOnce(s, d, "gdpr_orddel_keys")(
+    val ordDel = graft.SessionMemo.ofPersisted(s, d, "gdpr_orddel_keys")(
       ord.join(del, col("o_custkey") === col("del_key"), "left_semi")
         .select(col("o_orderkey").as("del_ord")))
     val liDel = li.join(ordDel,
@@ -940,7 +922,7 @@ object Relational {
     // otherwise re-runs the scan + two window passes + distinct per
     // execution (guide §5: reuse > recompute when the intermediate is
     // collapsed far below the fact).
-    val sess = materializeOnce(s, d, "cooc_sess")(
+    val sess = graft.SessionMemo.ofPersisted(s, d, "cooc_sess")(
       EventTime.withMs(Tables.events(s, d))
       .withColumn("new_sess",
         when(col("ms") - lag(col("ms"), 1).over(wOrd) > 1800000L, 1)
@@ -1025,7 +1007,7 @@ object Relational {
     // r17 optimization: perCust feeds the nation-average aggregate AND
     // the final filter join — materialized once (customer-cardinality)
     // so the orders fact is aggregated once, not twice.
-    val perCust = materializeOnce(s, d, "above_avg_percust")(
+    val perCust = graft.SessionMemo.ofPersisted(s, d, "above_avg_percust")(
       spend.join(
       Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey")),
       col("o_custkey") === col("c_custkey")))
@@ -1096,7 +1078,7 @@ object Relational {
     // the final join — unmaterialized, the fact window pass ran twice per
     // execution (the r17 q_cooccurrence pattern, missed by the ≥3-scan
     // audit cut). Collapsed-relation-sized, evictAll-registered.
-    val pairs = materializeOnce(s, d, "transitions_pairs")(
+    val pairs = graft.SessionMemo.ofPersisted(s, d, "transitions_pairs")(
       EventTime.withMs(Tables.events(s, d))
         .withColumn("from_type", lag(col("event_type"), 1).over(w))
         .filter(col("from_type").isNotNull)
@@ -1239,7 +1221,7 @@ object Relational {
     // r17 optimization: this projection feeds the purchase aggregate, the
     // first-touch window, and the last-touch join — materialized once so
     // the events fact is scanned once, not three times.
-    val ev = materializeOnce(s, d, "attribution_ev")(
+    val ev = graft.SessionMemo.ofPersisted(s, d, "attribution_ev")(
       EventTime.withMs(Tables.events(s, d))
       .select(col("user_id"), col("event_type"), col("ms"), col("event_id")))
     val fp = ev.filter(col("event_type") === "purchase")
@@ -1358,7 +1340,7 @@ object Relational {
     // the events scan ran 3× per execution. Collapsed-relation-sized,
     // evictAll-registered; `agg` is ≤|types| rows and derives from the
     // cached histogram, so it needs no cache of its own.
-    val hours = materializeOnce(s, d, "hourly_profile_hist")(
+    val hours = graft.SessionMemo.ofPersisted(s, d, "hourly_profile_hist")(
       EventTime.withMs(Tables.events(s, d))
         .select(col("event_type"), expr("(ms div 3600000) % 24").as("hour"))
         .groupBy(col("event_type"), col("hour")).agg(count(lit(1)).as("n")))
@@ -1595,7 +1577,7 @@ object Relational {
     // scalar AND the scored base (and the three nested rangeNtile passes
     // re-scan their input) — materialize once so the orders fact is
     // aggregated a single time.
-    val per = materializeOnce(s, d, "rfm_per_cust")(Tables.orders(s, d)
+    val per = graft.SessionMemo.ofPersisted(s, d, "rfm_per_cust")(Tables.orders(s, d)
       .select(col("o_custkey"),
         expr("unix_millis(cast(o_orderdate as timestamp)) div 86400000").as("day"),
         col("o_totalprice").cast("decimal(18,4)").as("price"))
@@ -1638,7 +1620,7 @@ object Relational {
     // everything downstream — the grand total, rangeCumSum's sketch and
     // bucket passes, and the final classification — reads the 2M-row
     // cached relation instead of re-running the fact aggregation per pass
-    val rev = materializeOnce(s, d, "abc_rev")(Tables.lineitem(s, d)
+    val rev = graft.SessionMemo.ofPersisted(s, d, "abc_rev")(Tables.lineitem(s, d)
       .groupBy(col("l_partkey"))
       .agg(sum(col("l_extendedprice").cast("decimal(18,4)")).as("rev")))
     // per-part aggregates scale WITH the corpus (×100 receipt: 13.6× for
@@ -2573,7 +2555,7 @@ object Relational {
     // BOTH anti-join sides, and the max-week scalar — unmaterialized,
     // the events scan + distinct ran 4× per execution. Bounded by
     // users × weeks; evictAll-registered.
-    val uw = materializeOnce(s, d, "churn_user_weeks")(
+    val uw = graft.SessionMemo.ofPersisted(s, d, "churn_user_weeks")(
       EventTime.withMs(Tables.events(s, d))
         .select(col("user_id"), expr("ms div 604800000").as("week"))
         .distinct())

@@ -223,7 +223,7 @@ object Sampling {
     // AND the ranking (2 corpus scans), and the ranked relation feeds the
     // cap aggregate AND the final quota projection — materialize both
     // (source-cardinality relations; the corpus is scanned once).
-    val avail = graft.operators.Relational.materializeOnce(s, d, "waterfill_avail")(
+    val avail = graft.SessionMemo.ofPersisted(s, d, "waterfill_avail")(
       Tables.documents(s, d)
       .select(col("source"), size(split(col("text"), " ")).cast("long").as("t"))
       .groupBy(col("source")).agg(sum(col("t")).as("avail")))
@@ -236,7 +236,7 @@ object Sampling {
       .withColumn("capped",
         col("avail") * (col("k") - col("i") + 1) + (col("cum") - col("avail"))
           <= col("budget"))
-    val rankedM = graft.operators.Relational.materializeOnce(
+    val rankedM = graft.SessionMemo.ofPersisted(
       s, d, "waterfill_ranked")(ranked)
     val cap = rankedM.agg(
       sum(when(col("capped"), col("avail")).otherwise(0L)).as("cum_capped"),

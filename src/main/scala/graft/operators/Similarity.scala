@@ -261,10 +261,8 @@ object Similarity {
     * registry still wraps the read so one session plans one scan
     * lineage. */
   private[graft] def embedPairsShared(s: SparkSession, d: String): DataFrame =
-    graft.SessionMemo.of(s, d, "embed_pairs_df") {
-      graft.sources.PairStore.readOrBuild(s, d, "embed_pairs", "embeddings") {
-        embedNeardupAuto(Tables.embeddings(s, d), 0.4)
-      }
+    graft.sources.PairStore.readOrBuild(s, d, "embed_pairs", "embeddings") {
+      embedNeardupAuto(Tables.embeddings(s, d), 0.4)
     }
 
   /** Exact all-pairs near-dup for corpora under the route cutoff: one
@@ -495,18 +493,14 @@ object Similarity {
   private[graft] def semDedupCore(e: DataFrame, threshold: Double,
       targetCell: Int = 256, seed: Long = 42L,
       maxPerCell: Int = 4096): DataFrame = {
-    val s = e.sparkSession
     val ev = e.select(col("vec_id"), col("embedding"))
     // r17 optimization — the fitted centers are an INDEX artifact (the
     // PqIndex registry doctrine) and were re-fit per invocation; the
-    // registry key is the input plan's semantic hash + file fingerprint
-    // (the ensureIndex snapshot key) + the fit parameters, so any
-    // consumer handing in the semantically-same corpus shares one fit.
-    // The corpus count rides in the same entry (it sizes k).
-    val snap = graft.sources.PairStore.fileFingerprint(s, ev.inputFiles.toSeq)
-    val baseKey = s"semdedup_${ev.queryExecution.analyzed.semanticHash()}" +
-      s"_${snap}_${targetCell}_$seed"
-    val (n, centersOpt) = graft.SessionMemo.of(s, "", baseKey) {
+    // registry entry is keyed by the input plan plus the fit parameters,
+    // so any consumer handing in the semantically-same corpus shares one
+    // fit. The corpus count rides in the same entry (it sizes k).
+    val baseKey = s"semdedup_${targetCell}_$seed"
+    val (n, centersOpt) = graft.SessionMemo.ofPlan(ev, baseKey) {
       val n = ev.count()
       // empty-corpus guard (the Pca/Pq doctrine): KMeans cannot fit 0 rows
       if (n == 0) (n, None)
@@ -527,7 +521,7 @@ object Similarity {
     // feeds FOUR subplans (both sides of the dominance self-join and the
     // final kept join) — each branch otherwise re-runs the n×k broadcast
     // assignment pass per execution.
-    val assigned = Relational.materializeOnce(s, "", baseKey + "_assigned")(
+    val assigned = graft.SessionMemo.ofPlanPersisted(ev, baseKey + "_assigned")(
       ev.crossJoin(broadcast(centers))
       .select(col("vec_id"), col("embedding"), col("cid"),
         (lit(2.0) * call_function("dot_product", col("embedding"), col("cvec")) -
@@ -631,7 +625,7 @@ object Similarity {
     * exactly this relation written to disk), so the registry doctrine
     * applies. */
   private def seedAssigned(s: SparkSession, d: String): DataFrame =
-    Relational.materializeOnce(s, d, "ivf_seed_assigned")(
+    graft.SessionMemo.ofPersisted(s, d, "ivf_seed_assigned")(
       Tables.embeddings(s, d).crossJoin(broadcast(seedCents(s, d)))
       .select(col("vec_id"), col("embedding"), col("cid"),
         call_function("cosine_sim", col("embedding"), col("cvec")).as("csim"))
@@ -745,7 +739,7 @@ object Similarity {
     // token stream) instead of three more assignment-join + explode
     // passes (guide §1.2: don't compute things twice that one partial
     // aggregation already holds).
-    val inC = graft.operators.Relational.materializeOnce(s, d, "cluster_topics_inc")(
+    val inC = graft.SessionMemo.ofPersisted(s, d, "cluster_topics_inc")(
       toks.groupBy(col("cell"), col("tok")).agg(count(lit(1)).as("cnt_c")))
     val totC = inC.groupBy(col("cell")).agg(sum(col("cnt_c")).as("tot_c"))
     val all = inC.groupBy(col("tok")).agg(sum(col("cnt_c")).as("cnt_all"))
@@ -1233,7 +1227,7 @@ object Similarity {
     // semi-join — unmaterialized, the corpus × probes × dims scoring pass
     // (THE expensive subplan here) executed twice per run. Collapsed-
     // relation-sized, evictAll-registered.
-    val top = graft.operators.Relational.materializeOnce(s, d,
+    val top = graft.SessionMemo.ofPersisted(s, d,
       "matryoshka_top10")(
       scored.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 10))
@@ -1331,7 +1325,7 @@ object Similarity {
     // the full directed-score pass (the quadratic broadcast-NL scan below
     // the cutoff), doubling the key's dominant cost. The cached relation
     // is top-5-per-vector sized (≤ 5n rows), never the n² score stream.
-    val knn = graft.operators.Relational.materializeOnce(s, d, "mutual_knn5")(
+    val knn = graft.SessionMemo.ofPersisted(s, d, "mutual_knn5")(
       scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5))
     val rev = knn.select(col("ia").as("rb"), col("ib").as("ra"),
       col("rn").as("rn_back"))

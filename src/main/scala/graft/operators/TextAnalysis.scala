@@ -141,7 +141,7 @@ object TextAnalysis {
     // r17 optimization: the (doc, term) counts feed the df aggregation
     // AND the score join — materialized once so the corpus is exploded
     // once, not twice.
-    val terms = graft.operators.Relational.materializeOnce(s, d, "tfidf_terms")(
+    val terms = graft.SessionMemo.ofPersisted(s, d, "tfidf_terms")(
       docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
@@ -455,7 +455,7 @@ object TextAnalysis {
     // r17 optimization: the per-doc length relation feeds the corpus
     // stats AND the score join — materialized once (doc-count-sized) so
     // the corpus is split/scanned once for lengths, not twice.
-    val dl = graft.operators.Relational.materializeOnce(s, d, "bm25_dl")(
+    val dl = graft.SessionMemo.ofPersisted(s, d, "bm25_dl")(
       toks.select(col("doc_id"), size(col("w")).as("dl")))
     val stats = dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
     val tf = toks.select(col("doc_id"), explode(col("w")).as("t"))
@@ -501,13 +501,13 @@ object TextAnalysis {
     // cache), and the prefix counts are exact sums of the pair counts —
     // c(w1·) = Σ_w2 c(w1 w2) — so they derive from the materialized
     // count table instead of a third pass (guide §1.2).
-    val big = graft.operators.Relational.materializeOnce(s, d, "bigram_lm_big")(
+    val big = graft.SessionMemo.ofPersisted(s, d, "bigram_lm_big")(
       toks
       .withColumn("w2",
         lead(col("w"), 1).over(Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
       .filter(col("w2").isNotNull)
       .select(col("doc_id"), col("w").as("w1"), col("w2")))
-    val cb = graft.operators.Relational.materializeOnce(s, d, "bigram_lm_cb")(
+    val cb = graft.SessionMemo.ofPersisted(s, d, "bigram_lm_cb")(
       big.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb")))
     val c1 = cb.groupBy(col("w1")).agg(sum(col("cb")).as("c1"))
     val v = toks.agg(countDistinct(col("w")).as("v"))
@@ -607,7 +607,7 @@ object TextAnalysis {
     // counts — c1(w1) = Σ_w2 cb, c2(w2) = Σ_w1 cb, n = Σ cb — so ONE
     // pass builds the materialized pair-count table and the other three
     // aggregates read it (was 4 evals of scan+posexplode+lead window).
-    val cb = graft.operators.Relational.materializeOnce(s, d, "pmi_cb")(
+    val cb = graft.SessionMemo.ofPersisted(s, d, "pmi_cb")(
       big.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb")))
     val c1 = cb.groupBy(col("w1")).agg(sum(col("cb")).as("c1"))
     val c2 = cb.groupBy(col("w2")).agg(sum(col("cb")).as("c2"))

@@ -109,38 +109,23 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
     * with a same-named corpus registration (r11 ADVICE). */
   def has(name: String): Boolean = catalog.contains(name)
 
-  /** Persisted-index registry: (kind, table plan identity, column) →
-    * on-disk layout path. Built lazily on the FIRST index-backed search
-    * and reused by every later query — the reference's index-lives-with-
-    * the-table economics (src/storage/index.rs) at the SQL layer. Keyed
-    * by the registered relation's SEMANTIC PLAN HASH (not the catalog
-    * name), so two sessions of one SparkSession querying the same corpus
-    * share one layout, while a session registering different data under
-    * the same name can never hit a stale index — the plan identity is
-    * the table-snapshot key, the same role PairStore's file fingerprint
-    * plays for parquet corpora. */
+  /** Persisted index layout for (kind, table, column): built lazily on
+    * the FIRST index-backed search and reused by every later query — the
+    * reference's index-lives-with-the-table economics (src/storage/index.rs)
+    * at the SQL layer. The session registry keys it by the registered
+    * relation's plan ([[graft.SessionMemo.ofPlan]]), not the catalog name:
+    * two EmdriveSessions over one SparkSession querying the same corpus
+    * share one layout, while new data under the same name — or the same
+    * parquet path rewritten in place — never hits a stale index. Layouts
+    * live in /tmp; a production catalog would home them next to the
+    * table. */
   private def ensureIndex(kind: String, tbl: String, column: String)
-      (build: String => Unit): String = {
-    val rel = table(tbl)
-    // plan identity alone is NOT a snapshot key for file-backed relations:
-    // a parquet path rewritten in place hashes identically (same path,
-    // same schema), so the key also folds a file-status fingerprint of the
-    // plan's input files (name, length, mtime — the manifest identity
-    // PairStore uses). In-memory relations have no input files; their
-    // LocalRelation semanticHash covers the data.
-    val snap = graft.sources.PairStore.fileFingerprint(
-      spark, rel.inputFiles.toSeq)
-    val key = (System.identityHashCode(spark), kind,
-      rel.queryExecution.analyzed.semanticHash(), snap, column)
-    val cur = EmdriveSession.indexPaths.get(key)
-    if (cur != null) cur
-    else {
+      (build: String => Unit): String =
+    graft.SessionMemo.ofPlan(table(tbl), s"sql_index_${kind}_$column") {
       val p = java.nio.file.Files.createTempDirectory(s"graft_${kind}_idx").toString
       build(p)
-      val prev = EmdriveSession.indexPaths.putIfAbsent(key, p)
-      if (prev != null) prev else p
+      p
     }
-  }
 
   private val TvfName = "^([A-Za-z_][A-Za-z_0-9]*)\\((.*)\\)$".r
 
@@ -1317,7 +1302,7 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
       val perLeaf: Seq[(SparkPlan, Long)] = all.collect {
         case f: FilterExec if scanLeaf(f.child).nonEmpty =>
           (scanLeaf(f.child).get, f.metrics("numOutputRows").value)
-      }.groupBy { case (leaf, _) => System.identityHashCode(leaf) }
+      }.groupBy { case (leaf, _) => leaf.id }
         .values.map(g => (g.head._1, g.map(_._2).min)).toSeq
       def tableOf(leaf: SparkPlan): Option[String] = {
         val names = leaf.output.map(_.name).toSet
@@ -1337,15 +1322,3 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
   }
 
 }
-
-object EmdriveSession {
-  /** Cross-session index-layout registry (see ensureIndex): keyed by
-    * (SparkSession identity, kind, relation semantic hash, column) so the
-    * write-once/query-many amortization spans sessions while plan
-    * identity rules out stale hits. Layouts live in /tmp for the
-    * sandbox; a production catalog would home them next to the table. */
-  private[sql] val indexPaths =
-    new java.util.concurrent.ConcurrentHashMap[
-      (Int, String, Int, String, String), String]()
-}
-

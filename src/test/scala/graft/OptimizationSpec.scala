@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Relational}
+import graft.operators.Dedup
 import graft.sources.Tables
 
 /** Round-17 optimization internals: the registry-sharing changes must be
@@ -20,12 +22,12 @@ class OptimizationSpec extends SparkTestBase {
     assert(!(Tables(spark, sfDir, "nation") eq a))
   }
 
-  test("materializeOnce hands every caller the same cached relation") {
+  test("SessionMemo.ofPersisted hands every caller the same cached relation") {
     val k = s"opt_spec_${System.nanoTime()}"
     var builds = 0
     def build = { builds += 1; Tables(spark, sfDir, "region").select(col("r_regionkey")) }
-    val a = Relational.materializeOnce(spark, sfDir, k)(build)
-    val b = Relational.materializeOnce(spark, sfDir, k)(build)
+    val a = SessionMemo.ofPersisted(spark, sfDir, k)(build)
+    val b = SessionMemo.ofPersisted(spark, sfDir, k)(build)
     assert(a eq b)
     assert(builds == 1, s"expected one build, got $builds")
   }
@@ -80,14 +82,12 @@ class OptimizationSpec extends SparkTestBase {
 
   test("q_weighted_median plans ONE data exchange and ONE window after the r18 share-the-exchange rewrite") {
     GraftSession.prepare(spark)
-    val df = SparkEntry.queries("q_weighted_median")(spark, sfDir)
-    val p = df.queryExecution.executedPlan.toString
-    def count(sub: String) =
-      p.sliding(sub.length).count(_ == sub)
-    // one hash-partitioned data exchange (the broadcast of `part` is a
-    // BroadcastExchange, counted separately) and one fused Window node
-    assert(count("Exchange hashpartitioning") == 1,
-      s"expected 1 data exchange:\n$p")
-    assert(count("Window") == 1, s"expected 1 fused Window:\n$p")
+    val plan = SparkEntry.queries("q_weighted_median")(spark, sfDir)
+      .queryExecution.executedPlan
+    // one data exchange (the broadcast of `part` is a
+    // BroadcastExchangeExec, not counted) and one fused Window node
+    assert(PlanNodes.count[ShuffleExchangeExec](plan) == 1,
+      s"expected 1 data exchange:\n$plan")
+    assert(PlanNodes.count[WindowExec](plan) == 1, s"expected 1 fused Window:\n$plan")
   }
 }

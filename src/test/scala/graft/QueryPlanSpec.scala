@@ -520,7 +520,7 @@ class QueryPlanSpec extends SparkTestBase {
       df.collect()
       val p = df.queryExecution.executedPlan.toString
       // r12: q_abc_analysis persists the SAME canonical per-part aggregate
-      // (materializeOnce), and the CacheManager substitutes it into any
+      // (SessionMemo.ofPersisted), and the CacheManager substitutes it into any
       // later query sharing the subtree — then the plan serves from
       // InMemoryTableScan (zero fact scans) instead of ReusedExchange
       // (one). Either shape satisfies the test's contract: never two

@@ -17,7 +17,8 @@ class SemDedupSpec extends SparkTestBase {
     * deterministic). */
   private def corpus(): DataFrame = {
     val r = new scala.util.Random(7)
-    import SparkTestBase.spark.implicits._
+    val session = SparkTestBase.spark
+    import session.implicits._
     val base = (0 until 180).map { i =>
       val shift = (i % 3) * 10.0f // group separation
       (i.toLong, Array.fill(8)(r.nextFloat() + shift))
@@ -40,7 +41,8 @@ class SemDedupSpec extends SparkTestBase {
 
   test("duplicate-free corpus is untouched; the pass is deterministic") {
     GraftSession.prepare(spark)
-    import SparkTestBase.spark.implicits._
+    val session = SparkTestBase.spark
+    import session.implicits._
     val r = new scala.util.Random(11)
     val distinctCorpus = (0 until 120).map { i =>
       (i.toLong, Array.fill(8)(r.nextFloat() + (i % 2) * 10.0f))

@@ -42,7 +42,8 @@ class ServerSpec extends SparkTestBase {
       val resp = post(base, "SELECT source, COUNT(*) AS n FROM documents GROUP BY source ORDER BY source;")
       assert(resp.statusCode() == 200)
       assert(resp.headers().firstValue("Content-Type").orElse("") == "application/json")
-      import SparkTestBase.spark.implicits._
+      val session = SparkTestBase.spark
+      import session.implicits._
       val got = spark.read.schema("source STRING, n BIGINT")
         .json(spark.createDataset(Seq(resp.body())))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
